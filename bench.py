@@ -376,12 +376,13 @@ def main() -> None:
         # r14 verdict item 9: two r14 runs silently lost the sf1 spot
         # when the replica fixture was absent — make the skip explicit
         # instead of dropping the key, so a fixture-less run is
-        # distinguishable from a never-attempted one.
-        out["sf1_spot"] = (
-            "SKIPPED - fixture missing (tools/make_scale_fixture.py)"
+        # distinguishable from a never-attempted one. Both shapes are
+        # dicts; a skip carries only its reason under "skipped".
+        out["sf1_spot"] = {
+            "skipped": "fixture missing (tools/make_scale_fixture.py)"
             if not os.path.isdir(sf1_dir)
-            else "SKIPPED - no xlin samples (see errors)"
-        )
+            else "no xlin samples (see errors)"
+        }
     if errors:
         # names only in the compact line — full messages would blow the
         # length budget right when the driver most needs a parseable

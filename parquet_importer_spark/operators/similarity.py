@@ -476,7 +476,11 @@ def kmeans_centroids(
     in ``oracle_sql``) — consumers pin the index's RECALL, not the
     centers. ``max_iter`` default dropped 5 → 2: each extra round is a
     full corpus pass at 100 TB, and measured recall had converged by
-    round 2 at every fixture (round 3 read equal or lower)."""
+    round 2 at every fixture (round 3 read equal or lower).
+
+    Raises ``ValueError`` when ``df`` has fewer rows than
+    ``n_centroids`` (an empty corpus included): Lloyd's init needs one
+    seed vector per centroid."""
     from parquet_importer_spark.functions.vectors import dist2  # noqa: PLC0415
 
     spark = df.sparkSession
@@ -487,6 +491,13 @@ def kmeans_centroids(
         .limit(n_centroids)
         .collect()
     )
+    if len(init) < n_centroids:
+        # init already took min(rows, n_centroids) vectors, so the row
+        # count costs no extra job
+        raise ValueError(
+            f"kmeans_centroids needs at least n_centroids={n_centroids} "
+            f"rows, got {len(init)}"
+        )
     centers: list[list[float]] = [
         [round(float(x), 6) for x in r.cvec] for r in init
     ]

@@ -23,9 +23,8 @@ behavior, so its existing driver row still certifies the shipped
 code. Anything the AST comparison can't prove identical (new
 function, parse failure, any non-docstring node) flags conservatively
 — a cheap re-check beats a stale certification. Shared-helper edits
-(operators/*) are out of scope here; in practice every helper change
-this repo has shipped also touched its suite-level consumers'
-behavior lines, which this guard sees.
+(operators/*) are out of scope here: a behavior change there needs a
+hand-added ``_FORCE_RECHECK`` entry for every consuming key.
 """
 
 from __future__ import annotations

@@ -1,7 +1,9 @@
 """The driver verifies only the first 50 registry keys per round, so
-__spark_entry__ rotates the window from recorded CORRECTNESS_r*.json
-history: never-verified oracle-bearing keys first, verified keys last,
-errored keys re-prioritized until green. Pure-Python logic — no Spark."""
+__spark_entry__ ranks keys from recorded CORRECTNESS_r*.json history:
+sentinel and errored keys first, then live _FORCE_RECHECK entries, then
+rows-only keys due on their 2-round cadence, then the staleness-ordered
+tail (a key with no driver row counts as round 0). Pure-Python logic —
+no Spark."""
 
 from __future__ import annotations
 
@@ -26,30 +28,37 @@ def entry():
     return mod
 
 
+def _ahead_of_tail(entry) -> set[str]:
+    """Keys the live history ranks ahead of the staleness-ordered tail
+    by design: the sentinel, errored keys, live forced re-checks and
+    rows-only keys due on their 2-round cadence."""
+    latest = entry._driver_latest()
+    _, errored = entry._driver_history()
+    newest = max(rnd for rnd, _ in latest.values())
+    return {entry._SENTINEL} | errored | {
+        k
+        for k, (rnd, row) in latest.items()
+        if rnd < entry._FORCE_RECHECK.get(k, 0)
+        or (row.get("err") == "no_oracle" and rnd <= newest - 2)
+    }
+
+
 def test_current_window_prioritizes_unverified_oracles(entry):
     from parquet_importer_spark.suite import ORACLES, QUERIES
 
-    verified, errored = entry._driver_history()
+    verified, _ = entry._driver_history()
     order = entry._driver_order()
     assert sorted(order) == sorted(QUERIES), "rotation must not drop keys"
     window = set(order[:WINDOW])
     # every key the driver has never verified and CAN hash-check must not
-    # be displaced by an already-verified key (sentinel/errored excepted).
-    # Oracle-upgraded keys are verified-rows-only keys re-promoted INTO
-    # the window so the driver hash-confirms their new oracle — they are
-    # priority work, not displacement (same carve-out as the deferral and
-    # staleness tests below).
-    upgraded = entry._oracle_upgraded()
+    # be displaced by a verified tail key; keys ranked ahead of the tail
+    # by design (sentinel, forced re-checks, due rows-only keys) are
+    # priority work, not displacement.
+    ahead = _ahead_of_tail(entry)
     unverified_oracle = {
         k for k in QUERIES if k not in verified and k in ORACLES
     }
-    displaced = {
-        k for k in order[:WINDOW]
-        if k in verified
-        and k != entry._SENTINEL
-        and k not in errored
-        and k not in upgraded
-    }
+    displaced = {k for k in window if k in verified and k not in ahead}
     spill = unverified_oracle - window
     assert not (displaced and spill), (
         f"verified keys {displaced} occupy slots while oracle-bearing "
@@ -134,43 +143,6 @@ def test_queries_and_oracles_consistent(entry):
     )
 
 
-def test_new_round_keys_defer_to_backlog(entry, monkeypatch):
-    """A key listed in _DEFER_NEW must sort AFTER every never-verified
-    backlog key (oracle or rows-only) and BEFORE the verified tail —
-    new additions must not push the pre-existing backlog out of the
-    driver's 50-slot window."""
-    from parquet_importer_spark.suite import ORACLES, QUERIES
-
-    verified, _ = entry._driver_history()
-    # oracle-upgraded keys are verified-rows-only keys re-promoted to
-    # the priority tier; they are not part of the verified TAIL
-    upgraded = entry._oracle_upgraded()
-    backlog = [k for k in QUERIES if k not in verified and k != entry._SENTINEL]
-    deferred = {k for k in backlog if k in entry._DEFER_NEW}
-    if not deferred:
-        pytest.skip("no deferred keys this round")
-    order = entry._driver_order()
-    pos = {k: i for i, k in enumerate(order)}
-    non_deferred = [k for k in backlog if k not in deferred]
-    if not non_deferred:
-        pytest.skip("entire backlog is deferred keys; ordering is trivial")
-    last_backlog = max(pos[k] for k in non_deferred)
-    first_verified = min(
-        (
-            pos[k]
-            for k in order
-            if k in verified and k != entry._SENTINEL and k not in upgraded
-        ),
-        default=len(order),
-    )
-    for k in deferred:
-        assert last_backlog < pos[k] < first_verified, (
-            f"deferred key {k} at {pos[k]} must sit between the backlog "
-            f"(ends {last_backlog}) and the verified tail "
-            f"(starts {first_verified})"
-        )
-
-
 def test_bench_stdout_line_fits_driver_capture():
     """The driver keeps only the LAST 2000 chars of bench.py stdout and
     JSON-parses them; rounds 2-3 lost the BENCH metric ("parsed": null)
@@ -218,39 +190,6 @@ def test_bench_stdout_line_fits_driver_capture():
         f"bench stdout line is {len(line)} chars; trim the headline or "
         "shorten query ids so the driver's 2000-char tail capture parses"
     )
-
-
-def test_oracle_upgraded_keys_enter_window(entry):
-    """A key whose latest driver row was rows-only (err == "no_oracle")
-    but which NOW carries an oracle must rank in the priority tier —
-    inside the 50-slot window — so the driver hash-confirms it instead
-    of treating the stale rows-only row as 'verified' forever (round-5
-    verdict, What's wrong #2)."""
-    upgraded = entry._oracle_upgraded()
-    if not upgraded:
-        pytest.skip("no oracle-upgraded keys this round")
-    order = entry._driver_order()
-    pos = {k: i for i, k in enumerate(order)}
-    for k in upgraded:
-        assert pos[k] < WINDOW, (
-            f"oracle-upgraded key {k} at slot {pos[k]} is outside the "
-            f"driver's {WINDOW}-slot window"
-        )
-
-
-def test_oracle_upgraded_detection(entry, tmp_path):
-    """Synthetic history: a rows-only row for a key that has an oracle
-    registers as upgraded; a hash-green row does not."""
-    from parquet_importer_spark.suite import ORACLES
-
-    with_oracle = next(iter(ORACLES))
-    other = next(k for k in ORACLES if k != with_oracle)
-    (tmp_path / "CORRECTNESS_r97.json").write_text(json.dumps({
-        with_oracle: {"err": "no_oracle", "spark_rows": 7},
-        other: {"hash_match": True, "err": None, "spark_rows": 3},
-    }))
-    upgraded = entry._oracle_upgraded(str(tmp_path))
-    assert with_oracle in upgraded and other not in upgraded
 
 
 def test_rows_only_keys_reenter_on_cadence(entry, tmp_path):
@@ -323,36 +262,74 @@ def test_verified_tail_is_staleness_ordered(entry):
     cycle back through the window instead of the same early-registry
     keys being re-checked every round (round-5 verdict, item #3)."""
     latest = entry._driver_latest()
-    verified, errored = entry._driver_history()
-    upgraded = entry._oracle_upgraded()
+    verified, _ = entry._driver_history()
+    ahead = _ahead_of_tail(entry)
     order = entry._driver_order()
-    tail = [
-        k
-        for k in order
-        if k in verified
-        and k != entry._SENTINEL
-        and k not in errored
-        and k not in upgraded
-        # force-recheck keys (code changed after their green row) jump
-        # ahead of the stale rotation by design — not part of the tail
-        and not (
-            k in entry._FORCE_RECHECK
-            and latest[k][0] < entry._FORCE_RECHECK[k]
-        )
-        # rows-only keys on their standing 2-round re-confirmation
-        # cadence rank with the upgraded tier — not part of the tail
-        and not (
-            latest[k][1].get("err") == "no_oracle"
-            and latest[k][0]
-            <= max(r for r, _ in latest.values()) - 2
-        )
-    ]
+    tail = [k for k in order if k in verified and k not in ahead]
     rounds = [latest[k][0] for k in tail]
     assert rounds == sorted(rounds), (
         "verified tail must be ordered oldest-green-round first"
     )
     if len(set(rounds)) > 1:
         assert rounds[0] < rounds[-1]
+
+
+def test_undriven_key_leads_verified_tail(entry, tmp_path):
+    """A key with no driver row at all (newly registered) counts as
+    round 0, so it ranks ahead of every verified key — even one green
+    in the oldest recorded round — and lands inside the window."""
+    from parquet_importer_spark.suite import QUERIES
+
+    names = list(QUERIES)
+    new = names[-1]  # last in registry order: only the rank can lift it
+    stale = names[: WINDOW // 2]
+    fresh = [k for k in names[WINDOW // 2:] if k != new]
+    green = {"hash_match": True, "err": None, "spark_rows": 3}
+    (tmp_path / "CORRECTNESS_r97.json").write_text(
+        json.dumps({k: green for k in stale})
+    )
+    (tmp_path / "CORRECTNESS_r99.json").write_text(
+        json.dumps({k: green for k in fresh})
+    )
+    order = entry._driver_order(str(tmp_path))
+    assert order[:2] == [entry._SENTINEL, new]
+
+
+def test_force_recheck_preempts_tail_then_graduates(
+    entry, tmp_path, monkeypatch
+):
+    """A live _FORCE_RECHECK entry (value > the key's latest green
+    round) ranks right after the sentinel/errored tier, in table order;
+    once a green row at or after that round lands it drops back into
+    the staleness-ordered tail by itself."""
+    from parquet_importer_spark.suite import QUERIES
+
+    names = list(QUERIES)
+    early, late = names[-2], names[-1]
+    broken = names[WINDOW]
+    monkeypatch.setattr(entry, "_FORCE_RECHECK", {late: 99, early: 99})
+    green = {"hash_match": True, "err": None, "spark_rows": 3}
+    (tmp_path / "CORRECTNESS_r97.json").write_text(
+        json.dumps({k: green for k in names})
+    )
+    (tmp_path / "CORRECTNESS_r98.json").write_text(json.dumps({
+        broken: {"err": "boom", "spark_rows": None},
+    }))
+    order = entry._driver_order(str(tmp_path))
+    # tier 0 is in registry order, so compare it as a set
+    assert set(order[:2]) == {entry._SENTINEL, broken}
+    assert order[2:4] == [late, early]
+
+    # graduation: a green row in the entry's own round satisfies it
+    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps({
+        late: green,
+        early: green,
+    }))
+    order = entry._driver_order(str(tmp_path))
+    assert set(order[:2]) == {entry._SENTINEL, broken}
+    assert order[-2:] == [early, late], (
+        "graduated keys rejoin the tail at their (newest) green round"
+    )
 
 
 def test_regression_reenters_priority_tier(entry, tmp_path):

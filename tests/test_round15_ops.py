@@ -122,6 +122,25 @@ def test_kmeans_centroids_partitioning_invariant(spark):  # noqa: F811
     assert a == b  # exact double equality across partitionings
 
 
+
+@pytest.mark.parametrize("n_rows", [0, 1])
+def test_kmeans_centroids_rejects_fewer_rows_than_centroids(
+    spark, n_rows  # noqa: F811
+):
+    """A corpus with fewer rows than ``n_centroids`` cannot seed the
+    Lloyd init; it must fail with a ValueError naming both counts, not
+    an IndexError from the center update."""
+    from parquet_importer_spark.io import read_table
+    from parquet_importer_spark.operators.similarity import (
+        kmeans_centroids,
+    )
+
+    emb = read_table(spark, "/root/testdata/sf0.001", "embeddings").limit(
+        n_rows
+    )
+    with pytest.raises(ValueError, match=rf"n_centroids=8 rows, got {n_rows}"):
+        kmeans_centroids(emb, n_centroids=8, seed=42)
+
 def test_gram_digest_convention_shared_across_engines(spark):  # noqa: F811
     """r14 verdict "What's wrong" #3: llm_contamination_ngram /
     llm_decontam_substring apply the SAME 60-bit md5-prefix BIGINT
