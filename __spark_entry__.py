@@ -53,6 +53,12 @@ _FORCE_RECHECK: dict[str, int] = {
     # every driver SF are unchanged, but the operator edit is outside
     # the currency guard's view.
     "llm_sim_ivf_kmeans": 16,
+    # sources/postgres_copy.copy_into_postgres now encodes with
+    # mapInArrow + pyarrow CSV (NULL is an unquoted empty field, not
+    # \N) and runs its DDL as one transaction; both keys load through
+    # it, and a sources/ edit is outside the currency guard's view.
+    "sink_postgis": 16,
+    "sink_postgres_copy": 16,
 }
 
 

@@ -10,7 +10,7 @@ warehouse. This image ships no Postgres JDBC jar and no Python pg
 client, but it does ship the full server (initdb/pg_ctl/postgres 15)
 and the ``psql`` CLI — and ``psql``'s ``COPY FROM STDIN`` over a unix
 socket IS the COPY protocol, so the executor-side loader shells one
-``psql`` per partition and streams Arrow-batch CSV through it.
+``psql`` per partition and streams pyarrow-written CSV through it.
 
 Pieces:
 
@@ -21,20 +21,30 @@ Pieces:
   (no binaries / no way to drop root), so callers degrade gracefully.
 - :func:`copy_into_postgres` — the distributed sink: driver-side DDL
   with the reference's fail/replace/append semantics (app.py:21 →
-  sinks.IF_EXISTS_TO_SAVEMODE mirrors the same map for JDBC), then
-  ``mapInPandas`` partitions each streaming CSV into its own psql
-  ``COPY FROM STDIN``; the returned per-partition row counts are the
-  action that drives the load AND the load audit.
+  sinks.IF_EXISTS_TO_SAVEMODE mirrors the same map for JDBC) run as
+  one transaction, then ``mapInArrow`` hands each partition's Arrow
+  record batches to ``pyarrow.csv.write_csv``, which writes them
+  straight into that partition's psql ``COPY FROM STDIN``; the
+  collected per-partition row counts are the action that drives the
+  load AND the load audit.
 - :func:`read_back` — driver-side ``COPY (query) TO STDOUT`` for
   verification-sized results only (row counts, aggregates, spot rows);
   corpus-sized readback belongs to a parallel JDBC/FDW scan, not this.
 
+CSV contract (both directions): Postgres's default CSV NULL, an
+unquoted empty field. pyarrow quotes every string value and writes
+NULL as an unquoted empty field, so ``''``, ``'\\N'`` and NULL load
+as three different values, and NaN/±inf doubles load as the floats
+they are. Timestamps cross as ``timestamp_ntz`` (the session wall
+clock) and binary as a ``\\x`` hex literal, both converted in the JVM.
+
 Scale notes (100 TB): the DSN on a cluster points at the warehouse
 over TCP and every executor holds a COPY stream — bound connection
 count with ``df.repartition(n)`` exactly as the JDBC sink does
-(sinks.write_jdbc); binary COPY (``FORMAT binary``) halves the text
-encode cost when the loader is CPU-bound, and is a format-string swap
-here. The scratch server is a TEST harness, not the scale path.
+(sinks.write_jdbc). The encoder is Arrow's C++ CSV writer, with no
+per-row Python; ``FORMAT binary`` was measured on a 32-core host and
+rejected (its encode overlaps the ingest and saved nothing). The
+scratch server is a TEST harness, not the scale path.
 """
 
 from __future__ import annotations
@@ -45,7 +55,8 @@ import shutil
 import subprocess
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = [
@@ -252,6 +263,17 @@ def _ddl_for(df: DataFrame, table: str, mode: str) -> list[str]:
     raise ValueError(f"mode must be fail/replace/append, got {mode!r}")
 
 
+def _copy_column(f: T.StructField) -> Column:
+    """``f`` as COPY's CSV text needs it: a timestamp as the session
+    wall clock (``timestamp_ntz``), binary as a ``\\x`` bytea hex literal."""
+    c = F.col("`" + f.name.replace("`", "``") + "`")
+    if isinstance(f.dataType, T.TimestampType):
+        c = c.cast("timestamp_ntz")
+    elif isinstance(f.dataType, T.BinaryType):
+        c = F.concat(F.lit("\\x"), F.hex(c))
+    return c.alias(f.name)
+
+
 def copy_into_postgres(
     df: DataFrame,
     dsn: dict,
@@ -261,62 +283,63 @@ def copy_into_postgres(
 ) -> int:
     """Bulk-load ``df`` into ``table`` via parallel COPY; returns rows loaded.
 
-    Driver runs the DDL (reference mode semantics, app.py:21); then each
-    partition pipes its Arrow batches as CSV into its own ``psql COPY
-    FROM STDIN`` — the load parallelism is the partition count, exactly
-    the ``numPartitions`` knob of the JDBC sink (sinks.write_jdbc).
-    Binary columns are hex-encoded to Postgres ``\\x`` bytea literals
-    executor-side; everything else rides pandas ``to_csv``.
-    """
-    for stmt in _ddl_for(df, table, mode):
-        _run_psql(dsn, stmt)
+    The driver runs the DDL (reference mode semantics, app.py:21) in one
+    ``psql -c`` call, so it is one transaction: a ``replace`` whose
+    CREATE fails rolls its DROP back and the old table survives. Each
+    partition then writes its Arrow batches with ``pyarrow.csv`` into
+    its own ``psql COPY ... FROM STDIN WITH (FORMAT csv)``; the load
+    parallelism is the partition count, exactly the ``numPartitions``
+    knob of the JDBC sink (sinks.write_jdbc).
 
-    binary_cols = [
-        f.name for f in df.schema.fields if isinstance(f.dataType, T.BinaryType)
-    ]
+    Types are normalised on the JVM side before the Python boundary:
+    timestamps become ``timestamp_ntz`` (the session-local wall clock
+    lands in Postgres ``timestamp``) and binary becomes a ``\\x`` hex
+    bytea literal; every other type is written as pyarrow renders it.
+    The CSV contract: a NULL is an unquoted empty field and every
+    string is quoted, so ``''``, ``'\\N'`` and NULL stay distinct;
+    doubles are written shortest-exact, with ``nan``/``inf``/``-inf``
+    kept as the float values Postgres parses them to.
+    """
+    # one psql -c call runs every statement in one transaction
+    _run_psql(dsn, "; ".join(_ddl_for(df, table, mode)))
+
     col_list = ", ".join(f'"{f.name}"' for f in df.schema.fields)
-    copy_sql = (
-        f"COPY {table} ({col_list}) FROM STDIN WITH (FORMAT csv, NULL '\\N')"
-    )
+    copy_sql = f"COPY {table} ({col_list}) FROM STDIN WITH (FORMAT csv)"
     psql_cmd = [*_psql_base(dsn), "-c", copy_sql]
 
     def load_partition(batches):
-        import pandas as pd  # noqa: PLC0415
+        import pyarrow as pa  # noqa: PLC0415
+        from pyarrow import csv  # noqa: PLC0415
 
+        opts = csv.WriteOptions(include_header=False)
         proc = subprocess.Popen(
             psql_cmd,
             stdin=subprocess.PIPE,
             stdout=subprocess.DEVNULL,
             stderr=subprocess.PIPE,
-            text=True,
         )
         n = 0
         try:
-            for pdf in batches:
-                for c in binary_cols:
-                    pdf[c] = pdf[c].map(
-                        lambda b: None if b is None else "\\x" + bytes(b).hex()
-                    )
-                pdf.to_csv(
-                    proc.stdin, index=False, header=False, na_rep="\\N"
-                )
-                n += len(pdf)
+            for batch in batches:
+                csv.write_csv(batch, proc.stdin, opts)
+                n += batch.num_rows
             proc.stdin.close()
             if proc.wait(timeout=600) != 0:
-                raise RuntimeError(
-                    f"COPY failed: {proc.stderr.read().strip()[:500]}"
-                )
+                err = proc.stderr.read().decode(errors="replace")
+                raise RuntimeError(f"COPY failed: {err.strip()[:500]}")
         finally:
             if proc.poll() is None:
                 proc.kill()
-        yield pd.DataFrame({"rows_loaded": [n]})
+        yield pa.RecordBatch.from_pydict({"rows_loaded": [n]})
 
-    src = df.repartition(num_partitions) if num_partitions else df
-    audit = src.mapInPandas(load_partition, schema="rows_loaded long")
-    # the aggregate is the ACTION that runs the load — and its result is
-    # the executor-side audit total the caller cross-checks in-database
-    total = audit.groupBy().sum("rows_loaded").first()[0]
-    return int(total or 0)
+    src = df.select([_copy_column(f) for f in df.schema.fields])
+    if num_partitions:
+        src = src.repartition(num_partitions)
+    audit = src.mapInArrow(load_partition, schema="rows_loaded long")
+    # collecting the per-partition counts is the ACTION that runs the
+    # load, and their sum is the executor-side audit total the caller
+    # cross-checks in-database
+    return sum(r.rows_loaded for r in audit.collect())
 
 
 def read_back(
@@ -326,27 +349,43 @@ def read_back(
 
     Driver-side ``COPY (query) TO STDOUT`` — for verification-sized
     results only; a corpus-sized readback belongs to a parallel scan.
+    The export uses the default CSV NULL (an unquoted empty field), and
+    pyarrow parses every column as text with only that field as NULL,
+    so a stored ``''``, ``'\\N'`` or ``'NaN'`` reads back as itself.
     ``schema`` is a Spark DDL string; values are cast from the CSV text
     through that schema so decimals stay exact.
     """
-    import csv  # noqa: PLC0415
     import io  # noqa: PLC0415
+    from decimal import Decimal  # noqa: PLC0415
 
-    out = _run_psql(
-        dsn, f"COPY ({query}) TO STDOUT WITH (FORMAT csv, NULL '\\N')"
-    )
+    import pyarrow as pa  # noqa: PLC0415
+    from pyarrow import csv  # noqa: PLC0415
+
+    out = _run_psql(dsn, f"COPY ({query}) TO STDOUT WITH (FORMAT csv)")
     target = T.StructType.fromDDL(schema)
+    names = [f"c{i}" for i in range(len(target.fields))]
+    columns: list[list] = [[] for _ in names]
+    if out:
+        parsed = csv.read_csv(
+            io.BytesIO(out.encode()),
+            read_options=csv.ReadOptions(column_names=names),
+            parse_options=csv.ParseOptions(newlines_in_values=True),
+            convert_options=csv.ConvertOptions(
+                column_types={n: pa.string() for n in names},
+                null_values=[""],
+                strings_can_be_null=True,
+                quoted_strings_can_be_null=False,
+            ),
+        )
+        columns = [col.to_pylist() for col in parsed.columns]
     rows = []
-    for rec in csv.reader(io.StringIO(out)):
+    for rec in zip(*columns, strict=True):
         vals = []
         for raw, field in zip(rec, target.fields, strict=True):
-            if raw == "\\N":
-                vals.append(None)
-                continue
             dt = field.dataType
-            if isinstance(dt, T.DecimalType):
-                from decimal import Decimal  # noqa: PLC0415
-
+            if raw is None:
+                vals.append(None)
+            elif isinstance(dt, T.DecimalType):
                 vals.append(Decimal(raw))
             elif isinstance(dt, T.LongType | T.IntegerType):
                 vals.append(int(raw))

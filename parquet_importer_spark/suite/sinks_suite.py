@@ -223,27 +223,30 @@ def sink_postgres_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's ENTIRE mission (app.py:88-193) at its production
     shape: where the reference pushes 50k-row pandas chunks through
     one ``to_sql`` connection (app.py:94,111-183), every Spark
-    partition here streams CSV through its own ``COPY FROM STDIN``, so
-    load parallelism is the partition count and the text framing is
-    the server's bulk path, not per-row INSERTs. The check is live and
-    end-to-end: lineitem is COPY-loaded into a scratch Postgres 15
-    (sources/postgres_copy.scratch_server — socket-only, trust, torn
-    down at exit), then POSTGRES aggregates the loaded table and that
-    read-back is the operator's result — hash-compared by the driver
-    against DuckDB aggregating the source parquet directly, so a
-    single row lost, doubled, or corrupted in flight mismatches.
+    partition here hands its Arrow batches to pyarrow's CSV writer,
+    which streams them through the partition's own ``COPY FROM
+    STDIN``, so load parallelism is the partition count and the text
+    framing is the server's bulk path, not per-row INSERTs. The check
+    is live and end-to-end: lineitem is COPY-loaded into a scratch
+    Postgres 15 (sources/postgres_copy.scratch_server — socket-only,
+    trust, torn down at exit), then POSTGRES aggregates the loaded
+    table and that read-back is the operator's result — hash-compared
+    by the driver against DuckDB aggregating the source parquet
+    directly, so a single row lost, doubled, or corrupted in flight
+    mismatches.
     Quantities ride as DECIMAL(12,2) end-to-end (CSV → numeric →
     SUM(numeric)) so the sum is exact on every engine (SURVEY §7.4.1).
     Environments with no startable server fall back to Spark computing
     the identical aggregate (same plan as agg_groupby's family) so the
     operator stays runnable; THIS image starts the real server.
 
-    Scale shape: DDL once on the driver; data only moves executor →
-    database (never through the driver); connection count = partition
-    count, bounded by ``num_partitions`` exactly like the JDBC sink.
-    At 100 TB the DSN points at the warehouse and the same plan holds;
-    FORMAT binary is the one-line swap when text encode is the
-    bottleneck."""
+    Scale shape: DDL once on the driver, in one transaction; data only
+    moves executor → database (never through the driver); connection
+    count = partition count, bounded by ``num_partitions`` exactly like
+    the JDBC sink. At 100 TB the DSN points at the warehouse and the
+    same plan holds. The encode is Arrow's C++ CSV writer with no
+    per-row Python; NULL is an unquoted empty field and every string
+    is quoted, so empty strings, ``'\\N'`` and NULL stay distinct."""
     from parquet_importer_spark.sources.postgres_copy import (  # noqa: PLC0415
         copy_into_postgres,
         read_back,

@@ -852,9 +852,11 @@ def stream_jdbc_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows → 30k at 10M; single-JVM lock manager + b-tree growth). The
     Spark side is one availableNow drain with per-partition batched
     writes either way. The production-scale path for bulk DB loads is
-    the COPY-protocol sink (sink_postgres_copy, ~300k rows/s live,
-    xlin 0.33); this key keeps Derby because it is the only engine the
-    sandbox lets the STREAMING hop hash-verify end-to-end."""
+    the COPY-protocol sink (sink_postgres_copy: about 96k rows/s for a
+    120k-row lineitem over 4 COPY streams on a 4-core host, see the
+    README performance notes); this key keeps Derby because it is the
+    only engine the sandbox lets the STREAMING hop hash-verify
+    end-to-end."""
     from parquet_importer_spark.sources.sinks import write_jdbc
     from parquet_importer_spark.streaming.microbatch import as_stream_dir
 

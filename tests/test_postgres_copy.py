@@ -4,17 +4,21 @@ Unlike test_postgis_live.py (which needs an externally provided
 PostGIS server and skips here), these tests run LIVE in this image:
 the harness initdb's a scratch Postgres 15 cluster (socket-only,
 trust) once per session and tears it down at exit. Covered: the three
-reference write modes, full-content round-trip fidelity, per-type CSV
-↔ Postgres encoding (nulls, decimals, timestamps, dates, booleans,
-bytea), and parallel multi-partition COPY streams.
+reference write modes (replace is atomic), full-content round-trip
+fidelity, per-type CSV ↔ Postgres encoding (nulls, decimals,
+timestamps in a non-UTC session, dates, booleans, bytea), strings and
+special doubles that must not become NULL on load or read-back, and
+parallel multi-partition COPY streams.
 """
 
 from __future__ import annotations
 
 import datetime
+import math
 from decimal import Decimal
 
 import pytest
+from pyspark.sql import functions as F
 
 from parquet_importer_spark.io import read_table
 from parquet_importer_spark.sources.postgres_copy import (
@@ -136,3 +140,118 @@ def test_parallel_partitions_load_once_each(spark, dsn, sf_dir):
     assert db["n"] == total
     assert db["keys"] == o.select("o_orderkey").distinct().count()
     _run_psql(dsn, "DROP TABLE t_par")
+
+
+def _db_rows(dsn, sql: str) -> list[list[str]]:
+    """Rows of ``sql`` as psql's unaligned text, read without read_back."""
+    return [line.split("|") for line in _run_psql(dsn, sql).splitlines()]
+
+
+def test_load_keeps_strings_and_special_doubles_distinct_from_null(spark, dsn):
+    """A string ``'\\N'`` or ``''`` and a NaN double are values, not NULL,
+    and doubles round-trip exactly through the CSV text."""
+    rows = [
+        (1, "\\N", float("nan")),
+        (2, "", float("inf")),
+        (3, None, float("-inf")),
+        (4, "NULL", -0.0),
+        (5, "x", 5e-324),
+        (6, '"', 0.30000000000000004),
+        (7, "NaN", None),
+    ]
+    df = spark.createDataFrame(rows, "id long, s string, d double")
+    copy_into_postgres(df, dsn, "t_nulls", mode="replace", num_partitions=2)
+    got = _db_rows(
+        dsn, "SELECT id, quote_nullable(s), d::text FROM t_nulls ORDER BY id"
+    )
+    assert got == [
+        ["1", "E'\\\\N'", "NaN"],
+        ["2", "''", "Infinity"],
+        ["3", "NULL", "-Infinity"],
+        ["4", "'NULL'", "-0"],
+        ["5", "'x'", "5e-324"],
+        ["6", "'\"'", "0.30000000000000004"],
+        ["7", "'NaN'", ""],
+    ]
+    assert _db_rows(dsn, "SELECT count(*) FROM t_nulls WHERE d IS NULL") == [
+        ["1"]
+    ]
+    back = read_back(
+        spark,
+        dsn,
+        "SELECT id, s, d FROM t_nulls ORDER BY id",
+        "id long, s string, d double",
+    ).collect()
+    assert [r["s"] for r in back] == ["\\N", "", None, "NULL", "x", '"', "NaN"]
+    d = [r["d"] for r in back]
+    assert math.isnan(d[0]) and d[1:6] == [
+        float("inf"),
+        float("-inf"),
+        -0.0,
+        5e-324,
+        0.30000000000000004,
+    ]
+    assert math.copysign(1.0, d[3]) == -1.0 and d[6] is None
+    _run_psql(dsn, "DROP TABLE t_nulls")
+
+
+def test_read_back_keeps_backslash_n_and_empty_string(spark, dsn):
+    _run_psql(
+        dsn,
+        "DROP TABLE IF EXISTS t_rb; CREATE TABLE t_rb (id int, s text); "
+        "INSERT INTO t_rb VALUES (1, '\\N'), (2, ''), (3, NULL)",
+    )
+    back = read_back(
+        spark, dsn, "SELECT id, s FROM t_rb ORDER BY id", "id int, s string"
+    ).collect()
+    assert [tuple(r) for r in back] == [(1, "\\N"), (2, ""), (3, None)]
+    _run_psql(dsn, "DROP TABLE t_rb")
+
+
+def test_replace_keeps_old_table_when_create_fails(spark, dsn):
+    """The replace DDL is one transaction: a CREATE that fails (here on
+    duplicate column names) rolls its DROP back."""
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "x long, y string")
+    copy_into_postgres(df, dsn, "t_atomic", mode="replace")
+    with pytest.raises(RuntimeError, match="more than once"):
+        copy_into_postgres(df.toDF("a", "a"), dsn, "t_atomic", mode="replace")
+    assert _db_rows(dsn, "SELECT x, y FROM t_atomic ORDER BY x") == [
+        ["1", "a"],
+        ["2", "b"],
+    ]
+    _run_psql(dsn, "DROP TABLE t_atomic")
+
+
+def test_timestamp_lands_as_session_wall_clock(spark, dsn):
+    """Postgres ``timestamp`` gets the wall clock Spark shows in a
+    non-UTC session time zone, DST offsets included."""
+    prior = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        df = spark.sql(
+            "SELECT * FROM VALUES "
+            "(1, TIMESTAMP'2024-01-15 08:00:00.123456'), "
+            "(2, TIMESTAMP'2024-07-01 23:30:00'), "
+            "(3, CAST(NULL AS TIMESTAMP)) AS t(id, ts)"
+        )
+        shown = [
+            r[0]
+            for r in df.orderBy("id")
+            .select(F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS"))
+            .collect()
+        ]
+        copy_into_postgres(df, dsn, "t_tz", mode="replace")
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prior)
+    stored = _db_rows(
+        dsn,
+        "SELECT coalesce(to_char(ts, 'YYYY-MM-DD HH24:MI:SS.US'), 'null') "
+        "FROM t_tz ORDER BY id",
+    )
+    assert shown == [
+        "2024-01-15 08:00:00.123456",
+        "2024-07-01 23:30:00.000000",
+        None,
+    ]
+    assert stored == [[shown[0]], [shown[1]], ["null"]]
+    _run_psql(dsn, "DROP TABLE t_tz")
