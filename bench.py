@@ -15,8 +15,11 @@ import os
 import re
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from parquet_importer_spark.profile import profile  # noqa: E402
 
 #: one query per plan family — scan, filter/project, hash agg, broadcast
 #: join, sort-merge join, as-of (range+window) join, window fn, top-k,
@@ -139,6 +142,34 @@ def _ambient_snapshot() -> dict:
     return snap
 
 
+def run_s(prof: dict) -> float:
+    """Wall seconds a profile timed: query construction + noop write."""
+    return prof["build_s"] + prof["exec_s"]
+
+
+def time_key(spark, build) -> tuple[dict, list[float]]:
+    """The per-key timing protocol (shared with tools/bench_family.py):
+    profile ``build`` best of 2, plus a third run when the two disagree
+    by >30%. Returns the kept (fastest) run's profile and every run's
+    seconds."""
+    # best of 2: the first run of a plan pays Janino whole-stage-codegen
+    # compilation (hundreds of ms of driver-side noise unrelated to data
+    # volume); the min is the steady-state cost that actually scales
+    # with input size. The time covers query construction too:
+    # iterative operators (e.g. llm_dedup_clusters) do distributed work
+    # while building their result DataFrame.
+    profs = [profile(spark, build) for _ in range(2)]
+    # adaptive third run: this box shows heavy-tailed ambient stalls (an
+    # identical back-to-back run can read 1.6 s then 9.3 s — SURVEY
+    # §8.1), so when the two runs disagree by >30% the min is not yet a
+    # settled steady-state number; one more sample costs seconds and
+    # de-noises the recorded series the round it happens.
+    if max(map(run_s, profs)) > 1.3 * min(map(run_s, profs)):
+        profs.append(profile(spark, build))
+    runs = [run_s(p) for p in profs]
+    return profs[runs.index(min(runs))], runs
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -149,94 +180,42 @@ def main() -> None:
 
     amb_start = _ambient_snapshot()
     spark = get_spark("bench")
+    flagship = partial(QUERIES["flagship_pricing_summary"], spark, sf_dir)
     # Warm up the JVM + parquet footer reads once so per-query timings
     # measure execution, not first-touch initialization.
-    QUERIES["flagship_pricing_summary"](spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    profile(spark, flagship)
     # Sentinel drift probe: the (already codegen-warm) flagship runs
     # once FIRST and once LAST; their ratio is a same-session slowdown
     # measure every round can normalize the suite total by.
-    t0 = time.perf_counter()
-    QUERIES["flagship_pricing_summary"](spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    sent_first = round(time.perf_counter() - t0, 3)
+    sent_first = round(run_s(profile(spark, flagship)), 3)
 
-    # best of 2 runs per query: the first run of a plan pays Janino
-    # whole-stage-codegen compilation (hundreds of ms of driver-side
-    # noise unrelated to data volume); the min is the steady-state cost
-    # that actually scales with input size.
     timings: dict[str, float] = {}
-    partitions: dict[str, dict] = {}
+    profiles: dict[str, dict] = {}
     errors: dict[str, str] = {}
     unstable: dict[str, float] = {}
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     for qid in HEADLINE:
         if qid not in QUERIES:
             errors[qid] = "not registered"
             continue
         try:
-            runs: list[float] = []
-            sc.setJobGroup(f"bench:{qid}", qid)
-            for _ in range(2):
-                # timer covers query construction too: iterative operators
-                # (e.g. llm_dedup_clusters) do distributed work while
-                # building their result DataFrame
-                t0 = time.perf_counter()
-                df = QUERIES[qid](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            # adaptive third run: this box shows heavy-tailed ambient
-            # stalls (an identical back-to-back run can read 1.6 s then
-            # 9.3 s — SURVEY §8.1), so when the two runs disagree by
-            # >30% the min is not yet a settled steady-state number; one
-            # more sample costs seconds and de-noises the recorded
-            # series the round it happens instead of a round later.
-            if max(runs) > 1.3 * min(runs):
-                t0 = time.perf_counter()
-                QUERIES[qid](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(time.perf_counter() - t0)
-            timings[qid] = round(min(runs), 3)
-            # dispersion flag: when even the two BEST runs disagree by
-            # >30% the recorded min is still unsettled (a single ambient
-            # stall among three runs is fine — two agreeing fast runs
-            # confirm the min). The r5 llm_dedup_containment 0.856 s
-            # outlier (SURVEY §8.1) would have carried this flag. Lands
-            # in the stderr detail.
-            best2 = sorted(runs)[:2]
-            if best2[1] > 1.3 * best2[0]:
-                unstable[qid] = round(best2[1] / best2[0], 2)
-            # scale guardrail (free driver-side metadata): per-stage task
-            # counts. AQE rightly coalesces a 5-row result to 1 final
-            # task, so a small final stage is normal — the red flag is a
-            # plan whose WIDEST stage is 1 task (fully serial: e.g. the
-            # single-row-group scan floor), invisible in sf0.1 wall time
-            # but fatal at 100 TB. Both numbers land in BENCH JSON.
-            job_ids = tracker.getJobIdsForGroup(f"bench:{qid}")
-            stage_ids = [
-                sid
-                for j in job_ids
-                for sid in (tracker.getJobInfo(j) or _NoJob()).stageIds
-            ]
-            infos = [
-                info
-                for sid in stage_ids
-                if (info := tracker.getStageInfo(sid)) is not None
-            ]
-            if infos and stage_ids:
-                final = tracker.getStageInfo(max(stage_ids))
-                partitions[qid] = {
-                    "final": final.numTasks if final else None,
-                    "max": max(i.numTasks for i in infos),
-                }
+            prof, runs = time_key(spark, partial(QUERIES[qid], spark, sf_dir))
         except Exception as exc:  # one broken query must not kill the run
             errors[qid] = f"{type(exc).__name__}: {exc}"[:200]
-        finally:
-            sc.setJobGroup("", "")
+            continue
+        timings[qid] = round(min(runs), 3)
+        profiles[qid] = {
+            k: round(v, 3) if isinstance(v, float) else v
+            for k, v in prof.items()
+        }
+        # dispersion flag: when even the two BEST runs disagree by
+        # >30% the recorded min is still unsettled (a single ambient
+        # stall among three runs is fine — two agreeing fast runs
+        # confirm the min). The r5 llm_dedup_containment 0.856 s
+        # outlier (SURVEY §8.1) would have carried this flag. Lands
+        # in the stderr detail.
+        best2 = sorted(runs)[:2]
+        if best2[1] > 1.3 * best2[0]:
+            unstable[qid] = round(best2[1] / best2[0], 2)
 
     # sf1.0 scale-ladder spot check (round-6 verdict item 6): run the
     # most expensive headline queries ONCE against the 10× replica
@@ -263,11 +242,7 @@ def main() -> None:
                 skipped.append(qid)
                 continue
             try:
-                t0 = time.perf_counter()
-                QUERIES[qid](spark, sf1_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                sec = time.perf_counter() - t0
+                sec = run_s(profile(spark, partial(QUERIES[qid], spark, sf1_dir)))
                 xlin[qid] = round(sec / (10.0 * timings[qid]), 2)
             except Exception as exc:
                 errors[f"sf1:{qid}"] = f"{type(exc).__name__}: {exc}"[:200]
@@ -283,11 +258,7 @@ def main() -> None:
                 sf1_spot["budget_skipped"] = skipped
 
     # Closing sentinel + ambient markers (see _ambient_snapshot).
-    t0 = time.perf_counter()
-    QUERIES["flagship_pricing_summary"](spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    sent_last = round(time.perf_counter() - t0, 3)
+    sent_last = round(run_s(profile(spark, flagship)), 3)
     amb_end = _ambient_snapshot()
     # Compact (parsed-stdout) markers: dr = last/first ratio of the
     # codegen-warm flagship sentinel (same-session slowdown), busy =
@@ -389,69 +360,28 @@ def main() -> None:
         # metric; the messages go to the stderr detail record below
         out["failed"] = sorted(errors)
     # Stage-level diagnostics go to STDERR: the driver captures only the
-    # last 2000 chars of stdout and JSON-parses them, and stage_tasks/
-    # serial_plans grew the round-2/3 stdout line past that window
+    # last 2000 chars of stdout and JSON-parses them, and per-key stage
+    # data grew the round-2/3 stdout line past that window
     # (BENCH_r02/r03 "parsed": null). The final stdout line is the
     # compact result JSON alone; tests/test_driver_order.py pins its
-    # length under 1800 chars for the current headline.
+    # length under 1860 chars for the current headline.
     detail = {
         "n_queries": len(timings),
         "sec_per_query": round(
             sum(timings.values()) / max(len(timings), 1), 3
         ),
         "errors": errors,
-        "stage_tasks": partitions,
+        # per key: the profile of the run whose time is recorded
+        # (parquet_importer_spark/profile.py). max_tasks <= 1 flags a
+        # fully serial plan — invisible in sf0.1 wall time but fatal at
+        # 100 TB; at small SF it usually reflects the single-row-group
+        # input floor (SURVEY §8.1)
+        "profile": profiles,
         "serial_plans": sorted(
-            q for q, p in partitions.items() if p["max"] <= 1
-        ),
-        "serial_plan_note": (
-            "max<=1 at small SF usually reflects the single-row-group "
-            "input floor (SURVEY §8.1), not an inherently serial plan; "
-            "watch this list for round-over-round regressions"
+            q for q, p in profiles.items()
+            if p["max_tasks"] is not None and p["max_tasks"] <= 1
         ),
         "unstable_runs": unstable,
-        "r12_movers_adjudication": (
-            "the 6 round-12 vs_ref_movers (bottomk 1.52x, containment "
-            "1.47x, prefix_filter 1.35x, ts_sessionize 1.32x, embedding "
-            "1.30x, line_dedup 1.26x) were ambient: a round-13 exclusive "
-            "re-run (start load1 0.11, sentinel dr 0.91) cleared "
-            "containment/ts_sessionize/embedding/line_dedup outright and "
-            "two tools/bench_family.py re-measures cleared bottomk "
-            "(1.18x) and prefix_filter (1.21x) at their minima while the "
-            "same keys read 1.63x/1.31x minutes apart on an idle box - "
-            "+-35% swing with byte-stable plan pins and untouched code. "
-            "llm_sim_topk read 1.26-1.47x across all three runs but the "
-            "absolute delta is 0.07-0.13 s on a 0.28 s key (floor "
-            "regime, plan pin stable: 2 exchanges, BNLJ+TakeOrdered, "
-            "code untouched since r7); the r11 reference value is "
-            "itself a session minimum - not a structural regression"
-        ),
-        "r14_ref_recut_adjudication": (
-            "BENCH_REF re-cut round 14 from run 1 of three back-to-back "
-            "exclusive runs at HEAD (47.58 / 46.13 / 52.48 s; run-1 "
-            "start load1 0.09; run-3 sentinel drifted to 2.0 - the "
-            "host's known monotone within-session decay; full per-query "
-            "numbers in BENCH_CLEAN_r14.json). This settles the two "
-            "keys the r13 verdict left open: llm_bpe_merge read 0.704 s "
-            "at its session minimum vs the old ref 0.73 (0.96x - "
-            "ambient, cleared outright) and llm_dedup_bottomk's "
-            "stuck-at-1.18x minimum was an artifact of the r11 ref "
-            "value being itself a floor-regime session minimum (1.176 s "
-            "on a key untouched since r10 with byte-stable plan pins); "
-            "vs the re-cut reference a same-round exclusive "
-            "bench_family run reads bottomk 1.13x and bpe_merge 1.22x "
-            "(abs delta 0.2 s, in-session min 0.74x) - both <1.2x at "
-            "minimum, no structural regression"
-        ),
-        "r8_regression_rootcause": (
-            "llm_pipeline_e2e's r8 +28% (verdict item 6) was ambient "
-            "load, not plan growth: its plan pin (4 exchanges, Window) "
-            "is byte-stable across r7-r9, and a round-9 re-measure put "
-            "it at 1.05x BENCH_REF while a co-loaded run shifted the "
-            "regression to entirely different keys (llm_dedup_near "
-            "2.05x) - the signature of scheduler contention, which the "
-            "ambient/sentinel markers in this record exist to flag"
-        ),
         "ambient_start": amb_start,
         "ambient_end": amb_end,
         "sentinel": {"first": sent_first, "last": sent_last},
@@ -460,23 +390,13 @@ def main() -> None:
         # combined output, so the per-query scale factors survive even
         # when the head of this detail line is truncated
         "sf1_xlin": sf1_spot.get("xlin", {}),
-        "bench_ref_provenance": (
-            "BENCH_REF.json refreshed round 14 from run 1 of three "
-            "exclusive same-code runs at HEAD (see "
-            "r14_ref_recut_adjudication and BENCH_CLEAN_r14.json; "
-            "supersedes the round-11 record, which the r13 verdict "
-            "called the stalest artifact in the timing chain). History: "
-            "r11 superseded r10, which superseded r8 after the round-9 "
-            "structural speedups; the r12 headline ran co-loaded and "
-            "its 6 movers were adjudicated ambient in r13"
-        ),
     }
     print(json.dumps(detail), file=sys.stderr)
     # The driver keeps only the last 2000 chars of combined output, so
     # the detail record above competes with the stdout line for the
     # window. Persist the FULL detail (ambient snapshots, sentinel
-    # pair, stage tasks, xlin, errors) next to this file — the judge
-    # and future rounds read it without truncation pressure.
+    # pair, per-key profiles, xlin, errors) next to this file — readers
+    # and future rounds get it without truncation pressure.
     try:
         with open(
             os.path.join(
@@ -489,10 +409,6 @@ def main() -> None:
     except OSError:
         pass
     print(json.dumps(out))
-
-
-class _NoJob:
-    stageIds: tuple = ()
 
 
 if __name__ == "__main__":

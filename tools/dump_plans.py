@@ -5,7 +5,8 @@ Usage: python tools/dump_plans.py <outdir> [query ...]
 Writes <outdir>/<query>_<suffix>.txt (suffix from $PLAN_SUFFIX, default
 'before') containing the formatted physical plan, plus a JSON line per
 query on stdout with plan-shape stats (exchange count, join strategies,
-python eval nodes, job count from one noop materialization) — the
+python eval nodes, job/stage counts of one profiled noop
+materialization, parquet_importer_spark/profile.py) — the
 measurement inventory guide §1 prescribes (plan shape + job fan-out)
 for every query before touching it.
 """
@@ -16,7 +17,6 @@ import io
 import json
 import os
 import sys
-import time
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -28,6 +28,7 @@ def main() -> None:
     suffix = os.environ.get("PLAN_SUFFIX", "before")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from parquet_importer_spark.profile import profile
     from parquet_importer_spark.session import get_spark
     from parquet_importer_spark.suite import QUERIES
 
@@ -38,43 +39,32 @@ def main() -> None:
         names = list(QUERIES)
 
     spark = get_spark("dump-plans")
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     # warm up codegen + footer reads so job counts reflect steady state
-    QUERIES["flagship_pricing_summary"](spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    profile(spark, lambda: QUERIES["flagship_pricing_summary"](spark, sf_dir))
 
     for qid in names:
         if qid not in QUERIES:
             print(json.dumps({"query": qid, "error": "not registered"}))
             continue
-        sc.setJobGroup(f"plan:{qid}", qid)
-        t0 = time.perf_counter()
-        df = QUERIES[qid](spark, sf_dir)
-        build_sec = time.perf_counter() - t0
+        built = []  # the profiled DataFrame, explained after its run
+
+        def build():
+            built.append(QUERIES[qid](spark, sf_dir))
+            return built[0]
+
+        prof = profile(spark, build)
         buf = io.StringIO()
         with redirect_stdout(buf):
-            df.explain("formatted")
+            built[0].explain("formatted")
         plan = buf.getvalue()
         with open(os.path.join(outdir, f"{qid}_{suffix}.txt"), "w") as fh:
             fh.write(plan)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        exec_sec = time.perf_counter() - t0
-        job_ids = tracker.getJobIdsForGroup(f"plan:{qid}")
-        n_stages = sum(
-            len(j.stageIds)
-            for j in (tracker.getJobInfo(i) for i in job_ids)
-            if j is not None
-        )
-        sc.setJobGroup("", "")
         stats = {
             "query": qid,
-            "build_sec": round(build_sec, 3),
-            "exec_sec": round(exec_sec, 3),
-            "jobs": len(job_ids),
-            "stages": n_stages,
+            "build_sec": round(prof["build_s"], 3),
+            "exec_sec": round(prof["exec_s"], 3),
+            "jobs": prof["jobs"],
+            "stages": prof["stages"],
             "exchanges": plan.count("Exchange"),
             "reused_exchanges": plan.count("ReusedExchange"),
             "smj": plan.count("SortMergeJoin"),

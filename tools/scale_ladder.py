@@ -56,8 +56,12 @@ import json
 import os
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from parquet_importer_spark.profile import profile  # noqa: E402
+from parquet_importer_spark.session import get_spark  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -163,71 +167,29 @@ def _sweep_sink_tmp() -> None:
         shutil.rmtree(d, ignore_errors=True)
 
 
-def _metrics_session(name: str):
-    """Rung session with the UI status store enabled so per-stage
-    TaskMetrics (spill/shuffle bytes) are queryable over the REST API.
-    The suite's default session disables the UI; the rungs re-enable
-    it on a random port — the store is in-memory, costs ~nothing at
-    these stage counts, and turns 'the disk did it' attributions into
-    recorded numbers (round-11 verdict item 3)."""
-    from parquet_importer_spark.session import get_spark
-
-    return get_spark(
-        name,
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "0"},
-    )
-
-
-def _stage_metrics(spark) -> dict:
-    """Cumulative task metrics across all completed stages of this
-    (fresh, single-key) application, via the UI REST API. Values are
-    exactly Spark's TaskMetrics sums: memory/disk spill bytes, shuffle
-    read/write bytes, shuffle write time, executor run time."""
-    import json as _json  # noqa: PLC0415
-    import urllib.request  # noqa: PLC0415
-
-    url = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    agg = dict.fromkeys(
-        (
-            "spill_mem_bytes",
-            "spill_disk_bytes",
-            "shuffle_write_bytes",
-            "shuffle_read_bytes",
-            "shuffle_write_time_ns",
-            "executor_run_time_ms",
-        ),
-        0,
-    )
-    try:
-        with urllib.request.urlopen(
-            f"{url}/api/v1/applications/{app}/stages?status=complete"
-        ) as fh:
-            stages = _json.load(fh)
-    except Exception as exc:  # noqa: BLE001 — metrics are best-effort
-        return {"error": f"{type(exc).__name__}: {exc}"[:120]}
-    for s in stages:
-        agg["spill_mem_bytes"] += s.get("memoryBytesSpilled", 0)
-        agg["spill_disk_bytes"] += s.get("diskBytesSpilled", 0)
-        agg["shuffle_write_bytes"] += s.get("shuffleWriteBytes", 0)
-        agg["shuffle_read_bytes"] += s.get("shuffleReadBytes", 0)
-        agg["shuffle_write_time_ns"] += s.get("shuffleWriteTime", 0)
-        agg["executor_run_time_ms"] += s.get("executorRunTime", 0)
+def _ladder_metrics(prof: dict) -> dict:
+    """A rung's stored ``*_metrics``: the stage TaskMetrics sums of one
+    parquet_importer_spark.profile run (task time, not wall time) —
+    memory/disk spill and shuffle write/read in GB, shuffle write time
+    and executor run time in seconds. They turn 'the disk did it'
+    attributions into recorded numbers (round-11 verdict item 3)."""
     gb = 1024.0**3
     return {
-        "spill_mem_gb": round(agg["spill_mem_bytes"] / gb, 2),
-        "spill_disk_gb": round(agg["spill_disk_bytes"] / gb, 2),
-        "shuffle_write_gb": round(agg["shuffle_write_bytes"] / gb, 2),
-        "shuffle_read_gb": round(agg["shuffle_read_bytes"] / gb, 2),
-        "shuffle_write_time_s": round(agg["shuffle_write_time_ns"] / 1e9, 1),
-        "executor_run_time_s": round(agg["executor_run_time_ms"] / 1e3, 1),
+        "spill_mem_gb": round(prof["spill_mem_bytes"] / gb, 2),
+        "spill_disk_gb": round(prof["spill_disk_bytes"] / gb, 2),
+        "shuffle_write_gb": round(prof["shuffle_write_bytes"] / gb, 2),
+        "shuffle_read_gb": round(prof["shuffle_read_bytes"] / gb, 2),
+        "shuffle_write_time_s": round(prof["shuffle_write_time_ns"] / 1e9, 1),
+        "executor_run_time_s": round(prof["executor_run_time_ms"] / 1e3, 1),
     }
 
 
-def _metrics_delta(after: dict, before: dict) -> dict:
-    if "error" in after or "error" in before:
-        return after
-    return {k: round(after[k] - before.get(k, 0), 2) for k in after}
+def _profiled(spark, key: str, sf_dir: str) -> tuple[float, dict]:
+    """One noop run of ``key`` at ``sf_dir``: (build + exec seconds, profile)."""
+    from parquet_importer_spark.suite import QUERIES
+
+    prof = profile(spark, partial(QUERIES[key], spark, sf_dir))
+    return round(prof["build_s"] + prof["exec_s"], 2), prof
 
 
 def _merge_base_row(old: dict, new: dict) -> dict:
@@ -397,15 +359,12 @@ def _rung_mid_one(key: str) -> None:
     if key not in QUERIES or key not in rows:
         print(f"{key}: skipped (not registered/laddered)", file=sys.stderr)
         return
-    spark = _metrics_session("scale-ladder-rung-mid")
+    spark = get_spark("scale-ladder-rung-mid")
     row = rows[key]
     row.pop("sf30_error", None)
     try:
-        before = _stage_metrics(spark)
-        t0 = time.perf_counter()
-        QUERIES[key](spark, sf30).write.format("noop").mode("overwrite").save()
-        row["sf30"] = round(time.perf_counter() - t0, 2)
-        row["sf30_metrics"] = _metrics_delta(_stage_metrics(spark), before)
+        row["sf30"], prof = _profiled(spark, key, sf30)
+        row["sf30_metrics"] = _ladder_metrics(prof)
         row["xlin_m"] = round(row["sf30"] / (3 * max(row["sf10"], 0.05)), 2)
         _refresh_cold_ratios(row)
         row["rung_mid_mem"] = RUNG3_MEM
@@ -449,15 +408,11 @@ def _cold_sf10_one(key: str) -> None:
     if key not in QUERIES or key not in rows:
         print(f"{key}: skipped (not registered/laddered)", file=sys.stderr)
         return
-    spark = _metrics_session("scale-ladder-cold-sf10")
+    spark = get_spark("scale-ladder-cold-sf10")
     row = rows[key]
     row.pop("sf10_cold_error", None)
     try:
-        t0 = time.perf_counter()
-        QUERIES[key](spark, RUNGS[2][1]).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        row["sf10_cold"] = round(time.perf_counter() - t0, 2)
+        row["sf10_cold"] = _profiled(spark, key, RUNGS[2][1])[0]
         if "sf100" in row:
             row["xlin_c_cold"] = round(
                 row["sf100"] / (10 * max(row["sf10_cold"], 0.05)), 2
@@ -485,22 +440,17 @@ def _rung3_one(key: str) -> None:
     if key not in QUERIES or key not in rows:
         print(f"{key}: skipped (not registered/laddered)", file=sys.stderr)
         return
-    spark = _metrics_session("scale-ladder-rung3")
-
-    def timed(sf_dir: str) -> float:
-        t0 = time.perf_counter()
-        QUERIES[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 2)
-
+    spark = get_spark("scale-ladder-rung3")
     row = rows[key]
     row.pop("sf100_error", None)
     try:
-        before = _stage_metrics(spark)
-        row["sf100"] = timed(sf100)
-        row["sf100_metrics"] = _metrics_delta(_stage_metrics(spark), before)
+        row["sf100"], prof = _profiled(spark, key, sf100)
+        row["sf100_metrics"] = _ladder_metrics(prof)
         if row["sf10"] > row["sf100"]:
             # inversion = the stored second rung was ambient-inflated
-            row["sf10"] = min(row["sf10"], timed(RUNGS[2][1]))
+            row["sf10"] = min(
+                row["sf10"], _profiled(spark, key, RUNGS[2][1])[0]
+            )
             row["xlin_b"] = round(row["sf10"] / (10 * max(row["sf1"], 0.05)), 2)
         row["xlin_c"] = round(row["sf100"] / (10 * max(row["sf10"], 0.05)), 2)
         _refresh_cold_ratios(row)
@@ -515,7 +465,6 @@ def _rung3_one(key: str) -> None:
 
 
 def main() -> None:
-    from parquet_importer_spark.session import get_spark
     from parquet_importer_spark.suite import QUERIES
 
     argv = sys.argv[1:]
@@ -560,9 +509,7 @@ def main() -> None:
     spark = get_spark("scale-ladder")
 
     def timed(key: str, sf_dir: str) -> float:
-        t0 = time.perf_counter()
-        QUERIES[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 2)
+        return _profiled(spark, key, sf_dir)[0]
 
     results: dict[str, dict] = {}
     errors: dict[str, str] = {}
