@@ -59,6 +59,33 @@ _FORCE_RECHECK: dict[str, int] = {
     # it, and a sources/ edit is outside the currency guard's view.
     "sink_postgis": 16,
     "sink_postgres_copy": 16,
+    # The LSH family (operators/dedup.py) now runs through one shared
+    # shingle-base / banding / bucket-candidate / verify pipeline, and
+    # every in-array i<j pair expansion through
+    # functions/arrays.pairs_within; plans are unchanged, but the
+    # operator edits are outside the currency guard's view.
+    "llm_dedup_near": 16,
+    "graph_pagerank": 16,
+    "llm_dedup_affine": 16,
+    "llm_dedup_containment": 16,
+    "llm_dedup_editdist": 16,
+    "llm_dedup_jaccard": 16,
+    "llm_contamination_near": 16,
+    "llm_source_overlap": 16,
+    "graph_triangle_count": 16,
+    "graph_kcore": 16,
+    "graph_lpa_communities": 16,
+    "graph_link_prediction": 16,
+    "graph_bfs_distance": 16,
+    "graph_assortativity": 16,
+    "llm_sim_pairs_lsh": 16,
+    "llm_sim_pairs_lsh_capped": 16,
+    "llm_dedup_embedding": 16,
+    "llm_dedup_embedding_capped": 16,
+    # connected_components now detects its first round by index, so an
+    # empty graph converges instead of raising.
+    "llm_dedup_clusters": 16,
+    "llm_dedup_keep_best": 16,
 }
 
 

@@ -3,12 +3,28 @@
 Four public schemes, each built scale-first:
 
 - **exact**: normalize → sha256 → one groupBy. One shuffle on the hash.
-- **MinHash + LSH banding**: per-doc signature of k seeded-md5 shingle
-  minima (computed entirely inside array expressions — NO explode, no
-  shuffle); docs explode only into (band, key) rows, so candidate
-  generation is an equi-join on band keys — the pairwise step only ever
-  sees hash-colliding docs. This is the standard shingle→minhash→band
-  →bucket-join pipeline; at 100 TB the band join is the only wide op.
+- **MinHash + LSH banding**: the standard shingle→minhash→band→bucket
+  →verify pipeline, built once from four stages that
+  :func:`minhash_lsh_pairs`, :func:`affine_minhash_lsh_pairs` and
+  :func:`minhash_containment_pairs` share, each adding only its verify
+  metric, filter and projection (:func:`minhash_editdist_pairs` takes
+  stages 2-3 and verifies on text prefixes; the probe×corpus
+  :func:`minhash_lsh_cross_pairs` takes stage 2):
+
+  1. ``_shingle_base`` — the (doc, sh, vh) table of shingles and their
+     60-bit verify digests, lazily checkpointed so the band branch and
+     both verify sides read ONE materialization;
+  2. ``_banded_keys`` — per-doc signature minima computed entirely
+     inside array expressions (NO explode, no shuffle), the per-seed
+     min being seeded md5 or the affine re-mix; docs explode only into
+     slim (band, key) rows, the shingle arrays never enter a shuffle;
+  3. ``_band_candidates`` — one slim shuffle on (band, key), pairs
+     built inside each bucket (``functions.arrays.pairs_within``), the
+     ``max_bucket`` valve, and a count of shared bands per pair — the
+     pairwise step only ever sees hash-colliding docs; at 100 TB the
+     band shuffle is the only wide op;
+  4. ``_verify_join`` — the digest arrays joined back onto the
+     candidates, yielding exact |∩| and |∪|.
 - **SimHash**: 16-bit signature as a pure array fold, no shuffle at all.
 - **n-gram Jaccard**: inverted-index join on shingles (candidate pairs
   share ≥1 shingle), exact |∩|/|∪| on the pruned pair set.
@@ -20,9 +36,12 @@ seed-dependent MinHashLSH (kept as a rows-only alt in suite/llm_dedup).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from parquet_importer_spark.functions.arrays import pairs_within
 from parquet_importer_spark.functions.text import shingles, shingles_all, tokens
 from parquet_importer_spark.io import parallelize
 
@@ -61,21 +80,39 @@ MINHASH_PROFILES: dict[str, dict[str, int]] = {
 }
 
 
-def _seeded_shingle_md5(shingle_arr: Column, seed: Column) -> Column:
-    return F.transform(
-        shingle_arr,
-        lambda g: F.md5(F.concat(F.lit("s"), seed.cast("string"), F.lit("|"), g)),
+def _md5_seed_min(s: Column) -> Column:
+    """Seed ``s``'s minhash over the shingle array ``sh``: the min of
+    md5('s' || s || '|' || gram) — one md5 pass per seed."""
+    return F.array_min(
+        F.transform(
+            F.col("sh"),
+            lambda g: F.md5(F.concat(F.lit("s"), s.cast("string"), F.lit("|"), g)),
+        )
     )
 
 
-def _banded_keys(base: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(doc, sh[, extra cols]) → slim (doc, …, band, key) LSH band rows.
+def _banded_keys(
+    base: DataFrame,
+    num_hashes: int,
+    bands: int,
+    seed_min: Callable[[Column], Column] = _md5_seed_min,
+) -> DataFrame:
+    """(doc, sh[, hv][, extra cols]) → slim (doc, …, band, key) LSH band
+    rows. Band b's key joins the ``seed_min`` values of seeds
+    b·r … b·r + r − 1 (r = num_hashes // bands rows per band); the
+    payload arrays ``sh``/``hv`` are dropped before any shuffle. Every
+    seed's pass runs exactly once across bands.
 
-    Each band's key joins rows_per_band seeded-minhash minima; the
-    shingle array (the wide payload) is dropped before any shuffle.
-    Every seeded hash pass runs exactly once across bands."""
+    ``bands`` must divide ``num_hashes``: a remainder would silently
+    leave seeds unused, and bands > num_hashes would make r = 0, where
+    ``sequence(0, -1)`` keys every band on the same seeds {0, -1}."""
+    if not 1 <= bands <= num_hashes or num_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must be in [1, num_hashes={num_hashes}] and "
+            "divide num_hashes"
+        )
     rows_per_band = num_hashes // bands
-    other = [c for c in base.columns if c != "sh"]
+    other = [c for c in base.columns if c not in ("sh", "hv")]
     return base.select(
         *other,
         F.explode(
@@ -89,9 +126,7 @@ def _banded_keys(base: DataFrame, num_hashes: int, bands: int) -> DataFrame:
                                 b * rows_per_band,
                                 (b + 1) * rows_per_band - 1,
                             ),
-                            lambda s: F.array_min(
-                                _seeded_shingle_md5(F.col("sh"), s)
-                            ),
+                            seed_min,
                         ),
                         "|",
                     ).alias("key"),
@@ -125,6 +160,60 @@ def _verify_hash_arr(sh: Column) -> Column:
     )
 
 
+def _shingle_base(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """The (doc, sh, vh) table — shingles plus their 60-bit verify
+    digests — lazily checkpointed: the band keys and both verify sides
+    read it, and would otherwise each re-tokenize and re-shingle the
+    corpus, the verify sides additionally re-hashing every gram (r14; at
+    production scale this IS the written digest artifact). The first
+    consumer's job materializes it."""
+    return (
+        parallelize(df)
+        .select(
+            F.col(id_col).alias("doc"),
+            shingles(F.col(text_col), k).alias("sh"),
+        )
+        .withColumn("vh", _verify_hash_arr(F.col("sh")))
+        .localCheckpoint(eager=False)
+    )
+
+
+def _band_candidates(banded: DataFrame, max_bucket: int | None) -> DataFrame:
+    """Slim (doc, band, key) rows → candidate (d1, d2, n_shared_bands),
+    d1 < d2. Bucket grouping instead of a self-join: one slim shuffle on
+    (band, key), pairs built inside each bucket, then one count per pair
+    of the bands it collides in. ``max_bucket`` drops buckets larger
+    than the cap before pair expansion (a bucket of B docs emits B²/2
+    pairs)."""
+    buckets = (
+        banded.groupBy("band", "key")
+        .agg(F.array_sort(F.collect_list("doc")).alias("docs"))
+        .filter(F.size("docs") >= 2)
+    )
+    if max_bucket is not None:
+        buckets = buckets.filter(F.size("docs") <= max_bucket)
+    return (
+        buckets.select(F.explode(pairs_within(F.col("docs"), "d1", "d2")).alias("p"))
+        .select("p.d1", "p.d2")
+        .groupBy("d1", "d2")
+        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+    )
+
+
+def _verify_join(
+    cand: DataFrame, base: DataFrame
+) -> tuple[DataFrame, Column, Column]:
+    """Join both sides' verify digests (``base.vh`` as sh1/sh2) onto the
+    candidate pairs; returns the joined frame and the exact set
+    |∩| and |∪| as double Columns for the caller's metric."""
+    s1 = base.select(F.col("doc").alias("d1"), F.col("vh").alias("sh1"))
+    s2 = base.select(F.col("doc").alias("d2"), F.col("vh").alias("sh2"))
+    verified = cand.join(s1, "d1").join(s2, "d2")
+    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
+    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
+    return verified, inter, union
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -137,7 +226,8 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact Jaccard verify.
 
-    rows_per_band = num_hashes // bands. Two docs become a candidate
+    rows_per_band = num_hashes // bands; ``bands`` must divide
+    ``num_hashes`` (ValueError otherwise). Two docs become a candidate
     pair iff some band of their signatures is identical; candidates are
     then verified with exact shingle-set Jaccard and filtered.
     Returns (id_1, id_2, n_shared_bands, jaccard), id_1 < id_2.
@@ -150,61 +240,9 @@ def minhash_lsh_pairs(
     adversarial hot bucket at scale is bounded at ~50M pairs. Tune DOWN
     per corpus; ``None`` disables (exact, unbounded).
     """
-    rows_per_band = num_hashes // bands
-    # materialize the shingle table + its 60-bit verify digests ONCE:
-    # three branches consume it (band keys, both verify sides) and
-    # would otherwise each re-tokenize and re-shingle the corpus, the
-    # verify sides additionally re-hashing every gram (r14; the
-    # materialize-once discipline bottomk_containment_pairs already
-    # documents — at production scale this IS the written digest
-    # artifact). Lazy: the first consumer's job materializes it.
-    base = (
-        parallelize(df)
-        .select(
-            F.col(id_col).alias("doc"),
-            shingles(F.col(text_col), k).alias("sh"),
-        )
-        .withColumn("vh", _verify_hash_arr(F.col("sh")))
-        .localCheckpoint(eager=False)
-    )
-    # Candidate generation over SLIM (doc, band, key) rows only — the
-    # shingle arrays (the wide payload) never enter the band shuffle.
+    base = _shingle_base(df, text_col, id_col, k)
     banded = _banded_keys(base.select("doc", "sh"), num_hashes, bands)
-
-    # Bucket-group pair generation instead of a self-join: one pass over
-    # the minhash pipeline, one slim shuffle on (band, key), pairs built
-    # inside each bucket. LSH keeps buckets small; at production scale
-    # add a bucket-size cap here to bound any adversarial hot bucket.
-    buckets = (
-        banded.groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list("doc")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("docs") <= max_bucket)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("d1"), y.alias("d2")),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.d1", "p.d2")
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    # Exact-Jaccard verify: join shingle sets back onto the candidate
-    # set, carrying the slim 60-bit int representation (_verify_hash_arr
-    # — the round-11 sf30 fix; same set metrics, ~4× lighter exchange).
-    s1 = base.select(F.col("doc").alias("d1"), F.col("vh").alias("sh1"))
-    s2 = base.select(F.col("doc").alias("d2"), F.col("vh").alias("sh2"))
-    verified = cand.join(s1, "d1").join(s2, "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
+    verified, inter, union = _verify_join(_band_candidates(banded, max_bucket), base)
     return (
         verified.withColumn("jaccard", F.round(inter / union, 6))
         .filter(F.col("jaccard") >= jaccard_threshold)
@@ -226,62 +264,24 @@ AFFINE_MULT = 2_654_435_761
 AFFINE_OFF = 40_503
 
 
-def _affine_banded_keys(base: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(doc, sh[, extra]) → slim (doc, …, band, key) LSH band rows with
-    ONE md5 per shingle total, vs :func:`_banded_keys`' ``num_hashes``
-    md5 passes.
+def _affine_seed_min(s: Column) -> Column:
+    """Seed ``s``'s affine minhash over ``hv``, the per-shingle base
+    hashes H(g) = int(md5(g)[:7], 16): ONE md5 per shingle total, vs
+    :func:`_md5_seed_min`'s md5 pass per seed.
 
-    The signature family is h_s(g) = (a_s·H(g) + b_s) mod p over a
-    single 28-bit base hash H(g) = int(md5(g)[:7], 16) — the classic
-    universal family (a_s = MULT·(s+1) mod p, b_s = OFF·(2s+1) mod p).
-    At the 128-hash production profile this cuts signature cost ~128×;
-    the trade is base-hash collisions (2^28 space) merging a negligible
-    fraction of distinct shingles — widen the prefix and lift p to a
-    61-bit prime for >10^7-shingle corpora. All arithmetic is exact
-    BIGINT (max a·h+b < 2^59) so a SQL oracle reproduces every band key.
-    """
-    rows_per_band = num_hashes // bands
-    other = [c for c in base.columns if c != "sh"]
-    with_hv = base.withColumn(
-        "hv",
-        F.transform(
-            F.col("sh"),
-            lambda g: F.conv(F.substring(F.md5(g), 1, 7), 16, 10).cast(
-                "bigint"
-            ),
-        ),
-    )
-
-    def seed_min(s: Column) -> Column:
-        a = F.pmod(F.lit(AFFINE_MULT) * (s + 1), F.lit(AFFINE_P))
-        b = F.pmod(F.lit(AFFINE_OFF) * (2 * s + 1), F.lit(AFFINE_P))
-        return F.array_min(
-            F.transform(
-                F.col("hv"), lambda h: F.pmod(a * h + b, F.lit(AFFINE_P))
-            )
-        )
-
-    return with_hv.select(
-        *other,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bb: F.struct(
-                    bb.cast("int").alias("band"),
-                    F.array_join(
-                        F.transform(
-                            F.sequence(
-                                bb * rows_per_band,
-                                (bb + 1) * rows_per_band - 1,
-                            ),
-                            lambda s: seed_min(s).cast("string"),
-                        ),
-                        "|",
-                    ).alias("key"),
-                ),
-            )
-        ).alias("bk"),
-    ).select(*other, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    The signature family is h_s(g) = (a_s·H(g) + b_s) mod p — the
+    classic universal family (a_s = MULT·(s+1) mod p, b_s = OFF·(2s+1)
+    mod p). At the 128-hash production profile this cuts signature cost
+    ~128×; the trade is base-hash collisions (2^28 space) merging a
+    negligible fraction of distinct shingles — widen the prefix and lift
+    p to a 61-bit prime for >10^7-shingle corpora. All arithmetic is
+    exact BIGINT (max a·h+b < 2^59) so a SQL oracle reproduces every
+    band key."""
+    a = F.pmod(F.lit(AFFINE_MULT) * (s + 1), F.lit(AFFINE_P))
+    b = F.pmod(F.lit(AFFINE_OFF) * (2 * s + 1), F.lit(AFFINE_P))
+    return F.array_min(
+        F.transform(F.col("hv"), lambda h: F.pmod(a * h + b, F.lit(AFFINE_P)))
+    ).cast("string")
 
 
 def affine_minhash_lsh_pairs(
@@ -298,51 +298,20 @@ def affine_minhash_lsh_pairs(
     identical pipeline shape, bucket caps, and verify as
     :func:`minhash_lsh_pairs`, but the signature stage hashes each
     shingle with md5 ONCE and derives all ``num_hashes`` values by
-    affine re-mixing (see :func:`_affine_banded_keys`). The scale
+    affine re-mixing (see :func:`_affine_seed_min`). The scale
     choice when signatures dominate (wide production profiles)."""
-    # materialize-once (same rationale and structure as
-    # minhash_lsh_pairs above: 3 consumers, shingle+digest computed
-    # once, lazily checkpointed)
-    base = (
-        parallelize(df)
-        .select(
-            F.col(id_col).alias("doc"),
-            shingles(F.col(text_col), k).alias("sh"),
-        )
-        .withColumn("vh", _verify_hash_arr(F.col("sh")))
-        .localCheckpoint(eager=False)
+    base = _shingle_base(df, text_col, id_col, k)
+    hv = F.transform(
+        F.col("sh"),
+        lambda g: F.conv(F.substring(F.md5(g), 1, 7), 16, 10).cast("bigint"),
     )
-    banded = _affine_banded_keys(base.select("doc", "sh"), num_hashes, bands)
-    buckets = (
-        banded.groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list("doc")).alias("docs"))
-        .filter(F.size("docs") >= 2)
+    banded = _banded_keys(
+        base.select("doc", "sh").withColumn("hv", hv),
+        num_hashes,
+        bands,
+        _affine_seed_min,
     )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("docs") <= max_bucket)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("d1"), y.alias("d2")),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.d1", "p.d2")
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    # slim int-array verify sides (round 11, shared with
-    # minhash_lsh_pairs — see _verify_hash_arr), read from the
-    # materialized digest column
-    s1 = base.select(F.col("doc").alias("d1"), F.col("vh").alias("sh1"))
-    s2 = base.select(F.col("doc").alias("d2"), F.col("vh").alias("sh2"))
-    verified = cand.join(s1, "d1").join(s2, "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
+    verified, inter, union = _verify_join(_band_candidates(banded, max_bucket), base)
     return (
         verified.withColumn("jaccard", F.round(inter / union, 6))
         .filter(F.col("jaccard") >= jaccard_threshold)
@@ -381,49 +350,9 @@ def minhash_containment_pairs(
     sketch variant that fixes exactly that (recall 1.0 for full
     containment); the verify and output schema are shared.
     """
-    # materialize-once (same rationale and structure as
-    # minhash_lsh_pairs: 3 consumers, shingle+digest computed once,
-    # lazily checkpointed)
-    base = (
-        parallelize(df)
-        .select(
-            F.col(id_col).alias("doc"),
-            shingles(F.col(text_col), k).alias("sh"),
-        )
-        .withColumn("vh", _verify_hash_arr(F.col("sh")))
-        .localCheckpoint(eager=False)
-    )
+    base = _shingle_base(df, text_col, id_col, k)
     banded = _banded_keys(base.select("doc", "sh"), num_hashes, bands)
-    buckets = (
-        banded.groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list("doc")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("docs") <= max_bucket)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("d1"), y.alias("d2")),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.d1", "p.d2")
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    # slim int-array verify sides (round 11, shared with
-    # minhash_lsh_pairs — see _verify_hash_arr), read from the
-    # materialized digest column
-    s1 = base.select(F.col("doc").alias("d1"), F.col("vh").alias("sh1"))
-    s2 = base.select(F.col("doc").alias("d2"), F.col("vh").alias("sh2"))
-    verified = cand.join(s1, "d1").join(s2, "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
+    verified, inter, union = _verify_join(_band_candidates(banded, max_bucket), base)
     c12 = F.round(inter / F.size("sh1").cast("double"), 6)
     c21 = F.round(inter / F.size("sh2").cast("double"), 6)
     return (
@@ -728,17 +657,8 @@ def jaccard_topk_pairs(
         # NB: with a cap the intersection count is a lower bound, so
         # results become approximate (document when enabling).
         postings = postings.filter(F.size("docs") <= max_posting)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("d1"), y.alias("d2")),
-            ),
-        )
-    )
     inter = (
-        postings.select(F.explode(pair_structs).alias("p"))
+        postings.select(F.explode(pairs_within(F.col("docs"), "d1", "d2")).alias("p"))
         .groupBy("p.d1", "p.d2")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
@@ -806,7 +726,7 @@ def connected_components(
     # the fixpoint needs an extra no-change pass, and a component whose
     # diameter is exactly max_iter would otherwise be rejected despite
     # having converged on the final allowed round
-    for _ in range(max_iter + 1):
+    for rnd in range(max_iter + 1):
         prop = sym.join(labels, sym.src == labels.node).select(
             F.col("dst").alias("node"), F.col("lab")
         )
@@ -823,7 +743,10 @@ def connected_components(
         )
         cur_sum = new.agg(F.sum("lab")).first()[0]
         labels = new
-        if prev_sum is not None and cur_sum == prev_sum:
+        # the first round has nothing to compare against; after it, an
+        # equal sum is the fixpoint — including an empty graph, whose
+        # sum is NULL every round
+        if rnd > 0 and cur_sum == prev_sum:
             converged = True
             break
         prev_sum = cur_sum
@@ -1039,29 +962,7 @@ def minhash_editdist_pairs(
         F.col(id_col).alias("doc"),
         shingles(F.col(text_col), k).alias("sh"),
     )
-    banded = _banded_keys(base, num_hashes, bands)
-    buckets = (
-        banded.groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list("doc")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("docs") <= max_bucket)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("d1"), y.alias("d2")),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.d1", "p.d2")
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
+    cand = _band_candidates(_banded_keys(base, num_hashes, bands), max_bucket)
     txt = parallelize(df).select(
         F.col(id_col).alias("doc"),
         F.substring(F.col(text_col), 1, prefix).alias("pfx"),

@@ -49,6 +49,11 @@ def pagerank(
     reuses that partitioning; localCheckpoint bounds the plan.
     """
     n = nodes.count()
+    if n == 0:
+        # no node to rank (and no 1/n uniform start): the empty result
+        return nodes.select(
+            F.col(id_col).alias("node"), F.lit(None).cast("double").alias("rank")
+        )
     # materialize edges ONCE: every eager round below joins against
     # them, and an expensive upstream (e.g. an LSH candidate pipeline)
     # would otherwise re-execute n_iter times

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from parquet_importer_spark.functions.arrays import pairs_within
 from parquet_importer_spark.functions.vectors import cosine
 from parquet_importer_spark.io import parallelize
 
@@ -149,15 +150,7 @@ def bucketed_scored_pairs(
         # scale valve: cap degenerate buckets (B docs → B²/2 pairs);
         # raise bucket_dims or add multi-probe instead of raising the cap
         buckets = buckets.filter(F.size("xs") <= max_bucket)
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("xs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("xs"), i + 2, F.size(F.col("xs"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
+    pair_structs = pairs_within(F.col("xs"), "a", "b")
     sim = F.when(
         (F.col("p.a.nrm") > 0) & (F.col("p.b.nrm") > 0),
         dot(F.col("p.a.v"), F.col("p.b.v")) / (F.col("p.a.nrm") * F.col("p.b.nrm")),
@@ -292,15 +285,7 @@ def _capped_bucket_scored_pairs(
         .agg(F.array_sort(F.collect_list("x")).alias("xs"))
         .filter(F.size("xs") >= 2)
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("xs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("xs"), i + 2, F.size(F.col("xs"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
+    pair_structs = pairs_within(F.col("xs"), "a", "b")
     sim = F.when(
         (F.col("p.a.nrm") > 0) & (F.col("p.b.nrm") > 0),
         dot(F.col("p.a.v"), F.col("p.b.v"))

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_importer_spark.functions.arrays import pairs_within
 from parquet_importer_spark.io import parallelize, read_table
 from parquet_importer_spark.operators.dedup import (
     affine_minhash_lsh_pairs,
@@ -1235,15 +1236,7 @@ def _supplier_sigma_edges(spark: SparkSession, sf_dir: str):
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ss"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ss"), i + 2, F.size(F.col("ss"))),
-                lambda y: F.struct(x.alias("s1"), y.alias("s2")),
-            ),
-        )
-    )
+    pair_structs = pairs_within(F.col("ss"), "s1", "s2")
     co = (
         li.groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_suppkey")).alias("ss"))
@@ -1269,10 +1262,11 @@ def _supplier_sigma_edges(spark: SparkSession, sf_dir: str):
     )
 
 
-@query(
-    "graph_triangle_count",
-    oracle="""
-    WITH co AS (
+#: The supplier sigma-cut edge CTEs (co -> st -> e) every supplier-graph
+#: oracle starts from: the independent lineitem self-join form of
+#: _supplier_sigma_edges.
+_SIGMA_EDGE_SQL = """
+    co AS (
       SELECT a.l_suppkey AS s1, b.l_suppkey AS s2,
              CAST(COUNT(DISTINCT a.l_orderkey) AS BIGINT) AS c
       FROM lineitem a
@@ -1291,7 +1285,16 @@ def _supplier_sigma_edges(spark: SparkSession, sf_dir: str):
       WHERE st.n * c > st.sc
         AND (st.n * c - st.sc) * (st.n * c - st.sc)
             > st.n * st.sc2 - st.sc * st.sc
-    ),
+    )"""
+
+#: graph_kcore's variant of the same CTEs, each one MATERIALIZED
+_KCORE_EDGE_SQL = _SIGMA_EDGE_SQL.replace(" AS (", " AS MATERIALIZED (")
+
+
+@query(
+    "graph_triangle_count",
+    oracle=f"""
+    WITH {_SIGMA_EDGE_SQL},
     deg AS (
       SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
       FROM (SELECT s1 AS node FROM e UNION ALL SELECT s2 FROM e)
@@ -1596,29 +1599,6 @@ def llm_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KCORE_K = 8
 _KCORE_ROUNDS = 4
 
-_KCORE_EDGE_SQL = """
-    co AS MATERIALIZED (
-      SELECT a.l_suppkey AS s1, b.l_suppkey AS s2,
-             CAST(COUNT(DISTINCT a.l_orderkey) AS BIGINT) AS c
-      FROM lineitem a
-      JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-      GROUP BY 1, 2
-    ),
-    st AS MATERIALIZED (
-      SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-             CAST(SUM(c) AS DECIMAL(38,0)) AS sc,
-             CAST(SUM(c * c) AS DECIMAL(38,0)) AS sc2
-      FROM co
-    ),
-    e AS MATERIALIZED (
-      SELECT s1, s2 FROM co, st
-      WHERE st.n * c > st.sc
-        AND (st.n * c - st.sc) * (st.n * c - st.sc)
-            > st.n * st.sc2 - st.sc * st.sc
-    )
-"""
-
 
 def _kcore_oracle() -> str:
     """Every per-round CTE is MATERIALIZED (round 14): the un-hinted
@@ -1643,7 +1623,7 @@ def _kcore_oracle() -> str:
         )
         prev = f"u{r}"
     return f"""
-    WITH {_KCORE_EDGE_SQL},
+    WITH {_KCORE_EDGE_SQL} ,
     u0 AS MATERIALIZED (SELECT s1 AS a, s2 AS b FROM e
            UNION ALL SELECT s2 AS a, s1 AS b FROM e),
     {",".join(rounds)}
@@ -1698,27 +1678,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_lpa_communities",
-    oracle="""
-    WITH co AS (
-      SELECT a.l_suppkey AS s1, b.l_suppkey AS s2,
-             CAST(COUNT(DISTINCT a.l_orderkey) AS BIGINT) AS c
-      FROM lineitem a
-      JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-      GROUP BY 1, 2
-    ),
-    st AS (
-      SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-             CAST(SUM(c) AS DECIMAL(38,0)) AS sc,
-             CAST(SUM(c * c) AS DECIMAL(38,0)) AS sc2
-      FROM co
-    ),
-    e AS (
-      SELECT s1, s2 FROM co, st
-      WHERE st.n * c > st.sc
-        AND (st.n * c - st.sc) * (st.n * c - st.sc)
-            > st.n * st.sc2 - st.sc * st.sc
-    ),
+    oracle=f"""
+    WITH {_SIGMA_EDGE_SQL},
     sym AS (
       SELECT s1 AS u, s2 AS v FROM e UNION ALL SELECT s2, s1 FROM e
     ),
@@ -1988,27 +1949,8 @@ def llm_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_link_prediction",
-    oracle="""
-    WITH co AS (
-      SELECT a.l_suppkey AS s1, b.l_suppkey AS s2,
-             CAST(COUNT(DISTINCT a.l_orderkey) AS BIGINT) AS c
-      FROM lineitem a
-      JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-      GROUP BY 1, 2
-    ),
-    st AS (
-      SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-             CAST(SUM(c) AS DECIMAL(38,0)) AS sc,
-             CAST(SUM(c * c) AS DECIMAL(38,0)) AS sc2
-      FROM co
-    ),
-    e AS (
-      SELECT s1, s2 FROM co, st
-      WHERE st.n * c > st.sc
-        AND (st.n * c - st.sc) * (st.n * c - st.sc)
-            > st.n * st.sc2 - st.sc * st.sc
-    ),
+    oracle=f"""
+    WITH {_SIGMA_EDGE_SQL},
     sym AS (
       SELECT s1 AS u, s2 AS v FROM e UNION ALL SELECT s2, s1 FROM e
     ),
@@ -2104,27 +2046,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_bfs_distance",
-    oracle="""
-    WITH co AS (
-      SELECT a.l_suppkey AS s1, b.l_suppkey AS s2,
-             CAST(COUNT(DISTINCT a.l_orderkey) AS BIGINT) AS c
-      FROM lineitem a
-      JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-      GROUP BY 1, 2
-    ),
-    st AS (
-      SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-             CAST(SUM(c) AS DECIMAL(38,0)) AS sc,
-             CAST(SUM(c * c) AS DECIMAL(38,0)) AS sc2
-      FROM co
-    ),
-    e AS (
-      SELECT s1, s2 FROM co, st
-      WHERE st.n * c > st.sc
-        AND (st.n * c - st.sc) * (st.n * c - st.sc)
-            > st.n * st.sc2 - st.sc * st.sc
-    ),
+    oracle=f"""
+    WITH {_SIGMA_EDGE_SQL},
     sym AS (
       SELECT s1 AS u, s2 AS v FROM e UNION ALL SELECT s2, s1 FROM e
     ),
@@ -2201,27 +2124,8 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_assortativity",
-    oracle="""
-    WITH co AS (
-      SELECT a.l_suppkey AS s1, b.l_suppkey AS s2,
-             CAST(COUNT(DISTINCT a.l_orderkey) AS BIGINT) AS c
-      FROM lineitem a
-      JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-      GROUP BY 1, 2
-    ),
-    st AS (
-      SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-             CAST(SUM(c) AS DECIMAL(38,0)) AS sc,
-             CAST(SUM(c * c) AS DECIMAL(38,0)) AS sc2
-      FROM co
-    ),
-    e AS (
-      SELECT s1, s2 FROM co, st
-      WHERE st.n * c > st.sc
-        AND (st.n * c - st.sc) * (st.n * c - st.sc)
-            > st.n * st.sc2 - st.sc * st.sc
-    ),
+    oracle=f"""
+    WITH {_SIGMA_EDGE_SQL},
     deg AS (
       SELECT node, CAST(COUNT(*) AS DECIMAL(38,0)) AS d
       FROM (SELECT s1 AS node FROM e UNION ALL SELECT s2 FROM e)

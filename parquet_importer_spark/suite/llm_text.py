@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_importer_spark.functions.arrays import pairs_within
 from parquet_importer_spark.functions.text import (
     LANG_LEXICON,
     STOPWORDS,
@@ -1476,15 +1477,7 @@ def llm_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sz = ex.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_grams")
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ss"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ss"), i + 2, F.size(F.col("ss"))),
-                lambda y: F.struct(x.alias("src_a"), y.alias("src_b")),
-            ),
-        )
-    )
+    pair_structs = pairs_within(F.col("ss"), "src_a", "src_b")
     shared = (
         ex.groupBy("gram")
         .agg(F.sort_array(F.collect_set("source")).alias("ss"))

@@ -13,6 +13,9 @@ from __future__ import annotations
 
 import ast
 
+import pytest
+
+from tests.conftest import SF_SMOKE
 from tests.test_round12_ops import (
     _decimal_bound_names,
     _has_decimal_cast,
@@ -129,17 +132,20 @@ def test_stream_checkpoint_conf_points_at_scratch(spark):
         assert ck.startswith("/dev/shm/pis_stream_ck_")
 
 
-def test_minhash_base_materializes_once(spark):
+@pytest.mark.parametrize(
+    "key", ["llm_dedup_near", "llm_dedup_affine", "llm_dedup_containment"]
+)
+def test_minhash_base_materializes_once(spark, key):
     """r14 materialize-once contract for the LSH family: the final plan
-    of llm_dedup_near reads the (doc, sh, vh) checkpoint — the band
-    branch and both verify sides scan the SAME materialized RDD, and no
-    parquet scan (i.e. no re-tokenize of the corpus) remains in the
-    consumer plan. A regression that drops the checkpoint re-introduces
-    three full shingle pipelines."""
+    of every consumer of the shared (doc, sh, vh) checkpoint reads it —
+    the band branch and both verify sides scan the SAME materialized
+    RDD, and no parquet scan (i.e. no re-tokenize of the corpus) remains
+    in the consumer plan. A regression that drops the checkpoint
+    re-introduces three full shingle pipelines."""
     from parquet_importer_spark.suite import QUERIES
 
     plan = (
-        QUERIES["llm_dedup_near"](spark, "/root/testdata/sf0.001")
+        QUERIES[key](spark, SF_SMOKE)
         ._jdf.queryExecution()
         .explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
